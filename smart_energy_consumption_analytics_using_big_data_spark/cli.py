@@ -1,4 +1,4 @@
-"""Command-line pipeline runner.
+"""Command-line entrypoint.
 
 Replaces the reference's five per-stage OS processes
 (`run_pipeline.ps1:18-40`: ingest -> preprocess -> features -> forecast
@@ -8,14 +8,16 @@ SparkSession when chained via `all`:
     python -m smart_energy_consumption_analytics_using_big_data_spark \
         all --readings <csv_dir> --tariffs <csv> --out <dir>
 
-Individual stages read/write Parquet at the given paths, so users can
-still materialize between stages exactly like the reference - it is
-just no longer mandatory.
+The five stage commands run the one stage list in
+`pipeline/stages.py` (the bench anchor runs the same list); each reads
+and writes Parquet under ``--out`` and prints the stage's JSON record.
+`all` walks that list, then export and report.
 """
 
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import sys
 
@@ -28,152 +30,33 @@ def _spark(args):
     return get_spark("energy-cli", master=args.master)
 
 
+def _run_stage(name: str, args) -> None:
+    """Run one stage of the shared pipeline list and print its record."""
+    from smart_energy_consumption_analytics_using_big_data_spark.pipeline import stages
+
+    fields = {f.name for f in dataclasses.fields(stages.StageConfig)}
+    cfg = stages.StageConfig(**{k: v for k, v in vars(args).items() if k in fields})
+    print(json.dumps(dict(stages.STAGES)[name](_spark(args), cfg)))
+
+
 def cmd_ingest(args) -> None:
-    """CSV -> typed Parquet (`data_ingestion.py:40-209`): one multi-path
-    scan, explicit schema, sentinel-aware - no inferSchema pass."""
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import readers, writers
-    from smart_energy_consumption_analytics_using_big_data_spark.sources.schemas import (
-        READINGS_CSV_SCHEMA,
-    )
-
-    spark = _spark(args)
-    raw = readers.read_csv(spark, args.readings, READINGS_CSV_SCHEMA)
-    writers.write_parquet(raw, f"{args.out}/raw_energy_data")
-    print(json.dumps({"stage": "ingest", "rows": spark.read.parquet(f"{args.out}/raw_energy_data").count()}))
-
-
-def _load_tariffs(spark, path: str):
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import readers
-    from smart_energy_consumption_analytics_using_big_data_spark.sources.schemas import (
-        TARIFFS_SCHEMA,
-    )
-
-    if path.endswith((".xlsx", ".xls")):
-        return readers.read_excel_dim(spark, path, expected_columns=["TariffDateTime", "Tariff"])
-    return readers.read_csv(spark, path, TARIFFS_SCHEMA, null_value=None)
+    _run_stage("ingest", args)
 
 
 def cmd_preprocess(args) -> None:
-    """clean + tariff join + hourly/daily rollups (`data_preprocessing.py:88-305`)."""
-    from smart_energy_consumption_analytics_using_big_data_spark.pipeline import energy
-
-    spark = _spark(args)
-    raw = spark.read.parquet(f"{args.out}/raw_energy_data")
-    energy.preprocess_to_parquet(
-        spark, raw, _load_tariffs(spark, args.tariffs), f"{args.out}/hourly", f"{args.out}/daily"
-    )
-    print(json.dumps({"stage": "preprocess", "daily_rows": spark.read.parquet(f"{args.out}/daily").count()}))
+    _run_stage("preprocess", args)
 
 
 def cmd_features(args) -> None:
-    """36+-column feature table (`feature_engineering.py:41-249`)."""
-    from smart_energy_consumption_analytics_using_big_data_spark.pipeline import energy
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
-
-    spark = _spark(args)
-    daily = spark.read.parquet(f"{args.out}/daily")
-    features = energy.engineer_features(daily)
-    writers.write_parquet(features, f"{args.out}/energy_features")
-    print(json.dumps({"stage": "features", "rows": spark.read.parquet(f"{args.out}/energy_features").count()}))
-
-
-def _ml_features(spark, out_dir: str):
-    from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
-
-    daily = spark.read.parquet(f"{out_dir}/daily").select(
-        F.col("LCLid").alias("user_id"),
-        "date",
-        F.col("daily_energy_kwh").alias("label_value"),
-    )
-    return FC.add_forecast_features(daily, entity="user_id")
+    _run_stage("features", args)
 
 
 def cmd_forecast(args) -> None:
-    """Grid-searched LR vs RF, best-by-RMSE persisted with predictions
-    (`forecasting_model.py:158-606`)."""
-    from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
-
-    spark = _spark(args)
-    feats = _ml_features(spark, args.out).cache()
-    lr = FC.train_linear_forecast(feats, args.test_cutoff, args.val_cutoff)
-    rf = FC.train_rf_forecast(feats, args.test_cutoff)
-    best = lr if lr.metrics["rmse"] <= rf.metrics["rmse"] else rf
-    preds = best.predictions.select("user_id", "date", "label_value", "prediction")
-    writers.write_parquet(preds, f"{args.out}/forecasting_results", num_files=8)
-    model_dir = f"{args.out}/models/best"
-    best.model.write().overwrite().save(model_dir)
-    _write_model_metadata(model_dir, best, "lr" if best is lr else "rf", feats, args.test_cutoff)
-    print(json.dumps({"stage": "forecast", "best": "lr" if best is lr else "rf",
-                      "metrics": {k: round(v, 4) for k, v in best.metrics.items()}}))
-
-
-def _write_model_metadata(model_dir: str, best, best_name: str, feats, test_cutoff: str) -> None:
-    """Persist best-model metadata next to the saved model
-    (`forecasting_model.py:561-571` parity: json for machines, txt with
-    the reference's field names for humans)."""
-    import datetime
-    import pathlib
-
-    from smart_energy_consumption_analytics_using_big_data_spark.ml.forecast import FEATURE_COLS
-
-    counts = feats.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum((F.col("date") >= test_cutoff).cast("long")).alias("test"),
-    ).collect()[0]
-    meta = {
-        "best_model": best_name,
-        "metrics": {k: round(v, 6) for k, v in best.metrics.items()},
-        "best_params": best.best_params,
-        "n_features": len(FEATURE_COLS),
-        "train_records": int(counts["total"] - counts["test"]),
-        "test_records": int(counts["test"]),
-        "trained_on": datetime.datetime.now().strftime("%Y-%m-%d %H:%M:%S"),
-    }
-    root = pathlib.Path(model_dir)
-    root.mkdir(parents=True, exist_ok=True)
-    (root / "model_metadata.json").write_text(json.dumps(meta, indent=2))
-    (root / "model_metadata.txt").write_text(
-        f"Best Model: {best_name}\n"
-        f"MAE: {best.metrics.get('mae', float('nan')):.4f}\n"
-        f"RMSE: {best.metrics.get('rmse', float('nan')):.4f}\n"
-        f"R2: {best.metrics.get('r2', float('nan')):.4f}\n"
-        f"Features Used: {len(FEATURE_COLS)}\n"
-        f"Training Records: {meta['train_records']}\n"
-        f"Test Records: {meta['test_records']}\n"
-        f"Trained On: {meta['trained_on']}\n"
-    )
+    _run_stage("forecast", args)
 
 
 def cmd_anomaly(args) -> None:
-    """K-Means + residual + per-cluster z-score (`anomaly_detection.py:55-196`)."""
-    from smart_energy_consumption_analytics_using_big_data_spark.ml import anomaly as AN
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
-
-    spark = _spark(args)
-    feats = _ml_features(spark, args.out)
-    preds = spark.read.parquet(f"{args.out}/forecasting_results").select(
-        "user_id", "date", "prediction"
-    )
-    joined = feats.join(preds, ["user_id", "date"], "left").withColumn(
-        "residual", F.abs(F.col("label_value") - F.coalesce("prediction", "label_value"))
-    )
-    scored = AN.detect_anomalies(
-        joined,
-        feature_cols=["label_value", "lag_1", "rolling_avg_7r", "day_of_week", "residual"],
-    )
-    out_rows = scored.count()
-    writers.write_parquet(scored, f"{args.out}/anomalies",
-                          num_files=max(20, out_rows // 50_000) if out_rows else 1)
-    # flagged count from the WRITTEN parquet: counting the lazy `scored`
-    # would run the K-Means transform + join DAG a third time (the
-    # energy_bench stage-5 lesson, ADVICE r9)
-    flagged = (
-        spark.read.parquet(f"{args.out}/anomalies")
-        .filter(F.col("is_anomaly") == 1)
-        .count()
-    )
-    print(json.dumps({"stage": "anomaly", "rows": out_rows, "flagged": flagged}))
+    _run_stage("anomaly", args)
 
 
 def cmd_export(args) -> None:
@@ -500,9 +383,14 @@ def main(argv: list[str] | None = None) -> int:
 
     args = parser.parse_args(argv)
     if args.cmd == "all":
-        for fn in (cmd_ingest, cmd_preprocess, cmd_features, cmd_forecast,
-                   cmd_anomaly, cmd_export, cmd_report):
-            fn(args)
+        from smart_energy_consumption_analytics_using_big_data_spark.pipeline.stages import STAGES
+
+        # through cmd_<stage>, looked up now: each stage prints the same
+        # record as its single-stage command
+        for name, _ in STAGES:
+            globals()[f"cmd_{name}"](args)
+        cmd_export(args)
+        cmd_report(args)
         return 0
     args.fn(args)
     return 0

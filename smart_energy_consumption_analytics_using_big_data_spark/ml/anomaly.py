@@ -51,34 +51,46 @@ def detect_anomalies(
     z_threshold: float = 3.0,
 ) -> DataFrame:
     """K-Means clusters + per-cluster distance z-score + flag
-    (`anomaly_detection.py:108-143`)."""
+    (`anomaly_detection.py:108-143`).
+
+    The fit caches its inputs and releases them before returning, on
+    success and on failure; the returned frame is lazy and recomputes
+    the scaled vectors when the caller runs it. An input the caller
+    already cached is used as is and left cached."""
     # Persist the (window-heavy) feature plan BEFORE any ML pass: the
     # scaler's stats pass and the prepped-vector materialization below
     # each re-execute it otherwise. Single-node the win is modest (first
     # execution is JIT/codegen-dominated); on a cluster each avoided
     # pass is a full scan of the feature lineage.
-    features = features.persist()
-    assembler = VectorAssembler(inputCols=feature_cols, outputCol="features_raw", handleInvalid="skip")
-    scaler = StandardScaler(inputCol="features_raw", outputCol="features")
-    prep = Pipeline(stages=[assembler, scaler]).fit(features)
-    # Materialize the prepped vectors ONCE: without this, every ML pass
-    # (k-means init + iterations + transform + the caller's action)
-    # re-executes the upstream feature plan - windows, joins and all.
-    # The reference cached for the same reason (`anomaly_detection.py:72,81`).
-    # Compact partitions first: each k-means iteration is one job over
-    # the cached vectors, so per-task overhead dominates when shuffle
-    # partitioning left many small partitions (no AQE on the ML path).
-    # ~128MB-target sizing, floor of defaultParallelism/4.
-    sc = features.sparkSession.sparkContext
-    prepped = prep.transform(features).coalesce(max(sc.defaultParallelism // 4, 1)).persist()
-    # initMode deviation from the reference default (k-means||): the
-    # parallel init costs ~5 extra full passes over the data and, on the
-    # scaled features here, lands a WORSE training cost than random init
-    # (measured 58.7k vs 55.6k at sf0.1). Random init is one pass.
-    kmeans = KMeans(
-        k=k, seed=SEED, featuresCol="features", predictionCol="cluster", initMode="random"
-    )
-    kmodel = kmeans.fit(prepped)
+    cached = []
+    if not features.storageLevel.useMemory and not features.storageLevel.useDisk:
+        cached.append(features.persist())
+    try:
+        assembler = VectorAssembler(inputCols=feature_cols, outputCol="features_raw", handleInvalid="skip")
+        scaler = StandardScaler(inputCol="features_raw", outputCol="features")
+        prep = Pipeline(stages=[assembler, scaler]).fit(features)
+        # Materialize the prepped vectors ONCE: without this, every k-means
+        # pass (init + iterations) re-executes the upstream feature plan -
+        # windows, joins and all. The reference cached for the same reason
+        # (`anomaly_detection.py:72,81`).
+        # Compact partitions first: each k-means iteration is one job over
+        # the cached vectors, so per-task overhead dominates when shuffle
+        # partitioning left many small partitions (no AQE on the ML path).
+        # ~128MB-target sizing, floor of defaultParallelism/4.
+        sc = features.sparkSession.sparkContext
+        prepped = prep.transform(features).coalesce(max(sc.defaultParallelism // 4, 1))
+        cached.append(prepped.persist())
+        # initMode deviation from the reference default (k-means||): the
+        # parallel init costs ~5 extra full passes over the data and, on the
+        # scaled features here, lands a WORSE training cost than random init
+        # (measured 58.7k vs 55.6k at sf0.1). Random init is one pass.
+        kmeans = KMeans(
+            k=k, seed=SEED, featuresCol="features", predictionCol="cluster", initMode="random"
+        )
+        kmodel = kmeans.fit(prepped)
+    finally:
+        for df in cached:
+            df.unpersist()
     clustered = kmodel.transform(prepped)
     centers = [c.tolist() for c in kmodel.clusterCenters()]
     scored = clustered.withColumn("distance_to_center", _centroid_distance_expr(centers))

@@ -238,10 +238,3 @@ def merge_for_export(
     )
     return merged.na.fill(0.0, ["forecast_prediction"])
 
-
-def run_pipeline(raw: DataFrame, tariffs: DataFrame) -> dict[str, DataFrame]:
-    """Stages 2-3 as one lazily-evaluated DAG; callers pick what to
-    materialize (the reference forced disk between every stage)."""
-    hourly, daily = preprocess(raw, tariffs)
-    features = engineer_features(daily)
-    return {"hourly": hourly, "daily": daily, "features": features}

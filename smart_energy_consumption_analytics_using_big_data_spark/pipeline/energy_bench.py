@@ -5,18 +5,21 @@ The reference publishes per-STAGE wall times for its 5-process batch
 pipeline (`HADOOP_MAPREDUCE_ANALYSIS.md:274-280`: ingest 9.55 min,
 preprocess 41.72, features 26.62, training 35.98, anomaly ~0.88;
 total 114.05 min for 167.9M raw rows). The headline bench suite is a
-query-shaped proxy; this module times the SAME five stages as one
-chain — CSV ingest -> typed parquet -> clean/tariff-join/rollups ->
-feature table -> LR-grid + RF forecast -> K-Means anomaly scoring —
-with parquet materialized between stages exactly like the reference's
-per-process handoff, so `energy_pipeline_total` in BENCH_r*.json is a
-pipeline-vs-pipeline number, not a proxy.
+query-shaped proxy; this module times the SAME five stages — the one
+stage list in `pipeline/stages.py` that the CLI also runs: CSV ingest
+-> typed parquet -> clean/tariff-join/rollups -> feature table ->
+LR-grid + RF forecast -> K-Means anomaly scoring, with parquet
+materialized between stages exactly like the reference's per-process
+handoff — so `energy_pipeline_total` in BENCH_r*.json is a
+pipeline-vs-pipeline number, not a proxy. This module adds only the
+fixture and a timer around each stage call.
 
 Fixture: deterministic synthetic LCL-shaped readings (FIXTURES.md SS1
 — trailing-space kWh column, "Null" sentinels, multi-shard CSV) on the
 full-year 2013 half-hourly grid, household count scaled by SF
-(sf0.1 -> 100 households -> ~1.75M raw rows). Generation happens
-OUTSIDE the timed window; only engine work is measured.
+(sf0.1 -> 100 households -> ~1.75M raw rows), plus a tariff CSV.
+Generation happens OUTSIDE the timed window; only engine work is
+measured.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ import time
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import functions as F
+from smart_energy_consumption_analytics_using_big_data_spark.pipeline import stages
 
 SEED = 42
 # households per unit SF: sf0.1 -> 100, sf0.01 -> 10 (floor)
@@ -40,55 +43,12 @@ TEST_CUTOFF = "2013-10-01"
 VAL_CUTOFF = "2013-08-01"
 
 
-def make_readings_csv(
-    out_dir: str, households: int, shards: int = 12, range_start: str = RANGE_START
-) -> int:
-    """Write the deterministic multi-shard readings fixture; returns
-    the raw row count. Column quirks are load-bearing (FIXTURES.md SS1):
-    the kWh column name ends in a space, ~0.5% literal "Null" sentinels,
-    ~0.2% empties, ~3% of grid rows missing."""
-    rng = np.random.default_rng(SEED)
-    times = pd.date_range(range_start, RANGE_END, freq="30min")
-    tstr = times.strftime("%Y-%m-%d %H:%M:%S")
-    intraday = 0.5 + 0.5 * np.sin(
-        2 * np.pi * (times.hour * 2 + times.minute // 30) / 48
-    )
-    frames = []
-    for i in range(households):
-        level = rng.lognormal(mean=-1.0, sigma=0.3)
-        kwh = level * intraday * rng.lognormal(mean=0, sigma=0.2, size=len(times))
-        frames.append(
-            pd.DataFrame(
-                {
-                    "LCLid": f"MAC{i + 1:06d}",
-                    "stdorToU": "Std" if i % 10 < 7 else "ToU",
-                    "DateTime": tstr,
-                    "KWH/hh (per half hour) ": np.round(kwh, 4).astype(str),
-                }
-            )
-        )
-    pdf = pd.concat(frames, ignore_index=True)
-    keep = rng.random(len(pdf)) > 0.03
-    pdf = pdf[keep].reset_index(drop=True)
-    pdf.loc[rng.random(len(pdf)) < 0.005, "KWH/hh (per half hour) "] = "Null"
-    pdf.loc[rng.random(len(pdf)) < 0.002, "KWH/hh (per half hour) "] = ""
-    os.makedirs(out_dir, exist_ok=True)
-    for i, shard in enumerate(np.array_split(pdf, shards)):
-        shard.to_csv(os.path.join(out_dir, f"block_{i}.csv"), index=False)
-    return len(pdf)
-
-
-def _gen_readings_shard(args: tuple) -> int:
-    """One shard of the full-scale fixture (module-level for process
-    pool pickling): generate its contiguous household block with an rng
-    seeded [SEED, shard index], apply the SS1 quirk masks shard-locally,
-    write one CSV. Same distributions and quirk rates as
-    `make_readings_csv`; the random stream differs (per-shard seeding is
-    what makes generation parallel and memory-bounded), which is fine
-    for a NEW scale point — recorded curve points keep the sequential
-    generator so their flag counts stay reproducible."""
-    out_dir, shard_i, house_lo, house_hi, range_start = args
-    rng = np.random.default_rng([SEED, shard_i])
+def _readings_frame(rng, house_lo: int, house_hi: int, range_start: str) -> pd.DataFrame:
+    """Households [house_lo, house_hi) on the half-hourly grid with the
+    SS1 quirk masks applied. Column quirks are load-bearing (FIXTURES.md
+    SS1): the kWh column name ends in a space, ~0.5% literal "Null"
+    sentinels, ~0.2% empties, ~3% of grid rows missing. The draws from
+    ``rng`` come in a fixed order, so a seed pins the output."""
     times = pd.date_range(range_start, RANGE_END, freq="30min")
     tstr = times.strftime("%Y-%m-%d %H:%M:%S")
     intraday = 0.5 + 0.5 * np.sin(
@@ -113,6 +73,32 @@ def _gen_readings_shard(args: tuple) -> int:
     pdf = pdf[keep].reset_index(drop=True)
     pdf.loc[rng.random(len(pdf)) < 0.005, "KWH/hh (per half hour) "] = "Null"
     pdf.loc[rng.random(len(pdf)) < 0.002, "KWH/hh (per half hour) "] = ""
+    return pdf
+
+
+def make_readings_csv(
+    out_dir: str, households: int, shards: int = 12, range_start: str = RANGE_START
+) -> int:
+    """Write the deterministic multi-shard readings fixture; returns
+    the raw row count."""
+    pdf = _readings_frame(np.random.default_rng(SEED), 0, households, range_start)
+    os.makedirs(out_dir, exist_ok=True)
+    for i, shard in enumerate(np.array_split(pdf, shards)):
+        shard.to_csv(os.path.join(out_dir, f"block_{i}.csv"), index=False)
+    return len(pdf)
+
+
+def _gen_readings_shard(args: tuple) -> int:
+    """One shard of the full-scale fixture (module-level for process
+    pool pickling): generate its contiguous household block with an rng
+    seeded [SEED, shard index], apply the SS1 quirk masks shard-locally,
+    write one CSV. Same distributions and quirk rates as
+    `make_readings_csv`; the random stream differs (per-shard seeding is
+    what makes generation parallel and memory-bounded), which is fine
+    for a NEW scale point — recorded curve points keep the sequential
+    generator so their flag counts stay reproducible."""
+    out_dir, shard_i, house_lo, house_hi, range_start = args
+    pdf = _readings_frame(np.random.default_rng([SEED, shard_i]), house_lo, house_hi, range_start)
     pdf.to_csv(os.path.join(out_dir, f"block_{shard_i}.csv"), index=False)
     return len(pdf)
 
@@ -168,165 +154,48 @@ def run_pipeline_bench(
     range_start: str = RANGE_START,
     generator: str = "driver",
 ) -> dict:
-    """Generate the fixture (untimed), then time the reference's five
-    stages with parquet handoff between them. Returns
-    {"stages": {name: sec}, "total": sec, "raw_rows": n, ...}.
-
-    ``grid``: "default" fits the library's 4-point LR grid + single
-    20-tree RF; "reference" reproduces the reference's exact stage-4
-    search — 9-point LR grid (regParam {0.01,0.1,1.0} x elasticNet
-    {0.0,0.5,1.0}, `forecasting_model.py:272-282`) and RF grid
-    {50,100} trees x {5,10} depth with inner time-split validation
-    (`forecasting_model.py:350-355`) — so the stage-4 time is
-    apples-to-apples with BASELINE.md's 35.98-min training stage."""
-    if grid not in ("default", "reference"):
-        raise ValueError(f"unknown grid {grid!r}: expected 'default' or 'reference'")
-    from smart_energy_consumption_analytics_using_big_data_spark.ml import anomaly as AN
-    from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
-    from smart_energy_consumption_analytics_using_big_data_spark.pipeline import energy
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import readers, writers
-    from smart_energy_consumption_analytics_using_big_data_spark.sources.schemas import (
-        READINGS_CSV_SCHEMA,
-        TARIFFS_SCHEMA,
-    )
-
+    """Generate the fixture (untimed), then time each stage of the
+    shared list (`pipeline/stages.py`) with parquet handoff between
+    them. Returns {"stages": {name: sec}, "total": sec, "raw_rows": n,
+    ...}. ``grid`` picks the stage-4 search shape (``StageConfig``):
+    "reference" makes the stage-4 time apples-to-apples with
+    BASELINE.md's 35.98-min training stage."""
     if generator not in ("driver", "sharded"):
         raise ValueError(f"unknown generator {generator!r}")
     csv_dir = os.path.join(work_dir, "readings_csv")
-    out = os.path.join(work_dir, "out")
+    tariffs_csv = os.path.join(work_dir, "tariffs.csv")
+    cfg = stages.StageConfig(
+        out=os.path.join(work_dir, "out"),
+        readings=csv_dir,
+        tariffs=tariffs_csv,
+        test_cutoff=test_cutoff,
+        val_cutoff=val_cutoff,
+        grid=grid,
+    )
     gen = make_readings_csv_sharded if generator == "sharded" else make_readings_csv
     raw_rows = gen(csv_dir, households, shards, range_start=range_start)
+    make_tariffs_pdf(range_start).to_csv(tariffs_csv, index=False)
     # Drain the fixture's dirty pages before the timed window opens:
     # at the 11 GB full-scale fixture, background writeback otherwise
     # competes with stage 1-2 I/O for minutes and lands generation cost
     # inside the measured stages (r11: a warm preprocess measured 107 s
     # solo but 329 s when stage 2 started right behind generation).
     os.sync()
-    tariffs = readers.dim_from_pandas(
-        spark,
-        make_tariffs_pdf(range_start),
-        schema=TARIFFS_SCHEMA,
-        expected_columns=["TariffDateTime", "Tariff"],
-    )
-    stages: dict[str, float] = {}
-
-    # Stage 1 — ingest: multi-shard CSV -> typed parquet
-    # (data_ingestion.py:40-209; baseline 9.55 min)
-    t0 = time.time()
-    raw = readers.read_csv(spark, csv_dir, READINGS_CSV_SCHEMA)
-    writers.write_parquet(raw, f"{out}/raw_energy_data")
-    stages["ingest"] = time.time() - t0
-
-    # Stage 2 — preprocess: clean + tariff join + hourly/daily rollups
-    # (data_preprocessing.py:88-305; baseline 41.72 min)
-    t0 = time.time()
-    energy.preprocess_to_parquet(
-        spark,
-        spark.read.parquet(f"{out}/raw_energy_data"),
-        tariffs,
-        f"{out}/hourly",
-        f"{out}/daily",
-    )
-    stages["preprocess"] = time.time() - t0
-
-    # Stage 3 — feature engineering: the 36+-column feature table
-    # (feature_engineering.py:41-249; baseline 26.62 min)
-    t0 = time.time()
-    writers.write_parquet(
-        energy.engineer_features(spark.read.parquet(f"{out}/daily")),
-        f"{out}/energy_features",
-    )
-    stages["features"] = time.time() - t0
-
-    # Stage 4 — forecast training: LR grid (inner time split) vs RF,
-    # best persisted (forecasting_model.py:158-606; baseline 35.98 min)
-    t0 = time.time()
-    daily_ml = spark.read.parquet(f"{out}/daily").select(
-        F.col("LCLid").alias("user_id"),
-        "date",
-        F.col("daily_energy_kwh").alias("label_value"),
-    )
-    feats = FC.add_forecast_features(daily_ml, entity="user_id").cache()
-    # The LR and RF searches are independent until the `best` pick, so
-    # they run from two driver threads (guide §2.6: Spark schedules
-    # concurrent jobs FIFO, the RF fits back-fill executors freed by
-    # the LR tail — the grid POINTS inside each family already overlap
-    # this way, r3). Each fit sees the same cached `feats` with its
-    # pinned seed, so models, metrics, and the selection are
-    # byte-identical to the sequential order (verified: rmse/params
-    # signature equality across interleaved reps in
-    # scripts/probe_r16_forecast_overlap_ab.py, and flags/RMSE on the
-    # full-scale anchor).
-    from concurrent.futures import ThreadPoolExecutor
-
-    if grid == "reference":
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            lr_f = ex.submit(
-                FC.train_linear_forecast,
-                feats,
-                test_cutoff,
-                val_cutoff,
-                reg_params=(0.01, 0.1, 1.0),
-                elastic_net_params=(0.0, 0.5, 1.0),
-            )
-            rf_f = ex.submit(
-                FC.train_rf_forecast,
-                feats,
-                test_cutoff,
-                grid=((50, 5), (50, 10), (100, 5), (100, 10)),
-                val_cutoff=val_cutoff,
-            )
-            lr, rf = lr_f.result(), rf_f.result()
-    else:
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            lr_f = ex.submit(FC.train_linear_forecast, feats, test_cutoff, val_cutoff)
-            rf_f = ex.submit(FC.train_rf_forecast, feats, test_cutoff)
-            lr, rf = lr_f.result(), rf_f.result()
-    best = lr if lr.metrics["rmse"] <= rf.metrics["rmse"] else rf
-    writers.write_parquet(
-        best.predictions.select("user_id", "date", "label_value", "prediction"),
-        f"{out}/forecasting_results",
-        num_files=8,
-    )
-    stages["forecast"] = time.time() - t0
-
-    # Stage 5 — anomaly: K-Means + residual + per-cluster z-score
-    # (anomaly_detection.py:55-196; baseline 0.88)
-    t0 = time.time()
-    preds = spark.read.parquet(f"{out}/forecasting_results").select(
-        "user_id", "date", "prediction"
-    )
-    joined = feats.join(preds, ["user_id", "date"], "left").withColumn(
-        "residual",
-        F.abs(F.col("label_value") - F.coalesce("prediction", "label_value")),
-    )
-    scored = AN.detect_anomalies(
-        joined,
-        feature_cols=["label_value", "lag_1", "rolling_avg_7r", "day_of_week", "residual"],
-    )
-    writers.write_parquet(scored, f"{out}/anomalies")
-    # count the flags from the parquet just written, NOT from `scored`:
-    # counting the lazy DataFrame would re-execute the whole K-Means
-    # transform + join DAG a second time inside the timed window,
-    # inflating the stage vs the reference's single-pass 0.88-min
-    # baseline (ADVICE r9).
-    flagged = (
-        spark.read.parquet(f"{out}/anomalies")
-        .filter(F.col("is_anomaly") == 1)
-        .count()
-    )
-    stages["anomaly"] = time.time() - t0
-    feats.unpersist()
-
+    seconds: dict[str, float] = {}
+    records: dict[str, dict] = {}
+    for name, fn in stages.STAGES:
+        t0 = time.time()
+        records[name] = fn(spark, cfg)
+        seconds[name] = time.time() - t0
     return {
-        "stages": {k: round(v, 3) for k, v in stages.items()},
-        "total": round(sum(stages.values()), 3),
+        "stages": {k: round(v, 3) for k, v in seconds.items()},
+        "total": round(sum(seconds.values()), 3),
         "raw_rows": raw_rows,
         "households": households,
         "grid": grid,
         "range_start": range_start,
         "generator": generator,
-        "flagged": flagged,
-        "best_model": "lr" if best is lr else "rf",
-        "rmse": round(best.metrics["rmse"], 4),
+        "flagged": records["anomaly"]["flagged"],
+        "best_model": records["forecast"]["best"],
+        "rmse": records["forecast"]["metrics"]["rmse"],
     }

@@ -359,7 +359,7 @@ def build_report(
     # the anomalies table feeds ~10 independent panel actions; persist
     # it (and the derived residual frame) for the report build so each
     # panel re-reads cached blocks instead of re-scanning the parquet —
-    # the same discipline as detect_anomalies/cmd_anomaly (ADVICE r9)
+    # the same discipline as detect_anomalies (ADVICE r9)
     if anomalies is not None:
         anomalies = anomalies.persist()
     errs = None
